@@ -20,8 +20,11 @@ join:
   key, which a new-rows-only delta would silently leave stale.
 - **View recompute** is bucket-local: only view buckets holding affected
   join keys are rebuilt, by joining the two post-batch states semi-joined
-  down to the affected keys. Cost tracks |Δ| and the join fan-out of the
-  touched keys, never view size.
+  down to those buckets. A dynamic overwrite replaces a whole bucket, so
+  every join key hashed into it is recomputed, not only the affected ones —
+  otherwise the pairs of an unaffected key sharing the bucket would be
+  erased. Cost tracks |Δ| and the join fan-out of the touched buckets,
+  never view size.
 - **Sentinel rows** guarantee every affected bucket is WRITTEN even when
   its recomputed content is empty (all pairs gone): dynamic partition
   overwrite only replaces partitions present in the output, so an
@@ -40,10 +43,14 @@ partially-written view heals on replay (all affected buckets rebuilt);
 mid-write readers see bucket-level eventual consistency, the same
 contract as the other sinks here.
 
+All three tables (left state, right state, view) are
+``state_table.StateTable`` directories: reads apply the schema pinned at
+write time, so no read infers a schema from the Parquet footers.
+
 Scale (100 TB): per batch, each side does one bucket-pruned state merge
 (upsert protocol) and the view rebuild reads two state tables pruned by a
-broadcast semi-join on the affected keys; the join itself shuffles only
-affected-key rows. At 4096 buckets a busy batch rewrites a few dozen
+broadcast semi-join on the affected view buckets; the join itself shuffles
+only rows of those buckets. At 4096 buckets a busy batch rewrites a few dozen
 bucket files per table.
 """
 
@@ -57,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from .state_table import StateTable
 
 
 class JoinViewSink:
@@ -71,9 +79,11 @@ class JoinViewSink:
         n_buckets: int = 16,
     ):
         self.spark = spark
-        self.left_dir = os.path.join(base_dir, "left")
-        self.right_dir = os.path.join(base_dir, "right")
-        self.view_dir = os.path.join(base_dir, "view")
+        self.left_state = StateTable(spark, os.path.join(base_dir, "left"))
+        self.right_state = StateTable(spark, os.path.join(base_dir, "right"))
+        self.view_state = StateTable(
+            spark, os.path.join(base_dir, "view"), partition_col="vbucket"
+        )
         self.join_key = join_key
         self.left_keys = list(left_keys)
         self.right_keys = list(right_keys)
@@ -81,13 +91,6 @@ class JoinViewSink:
         self.n_buckets = n_buckets
 
     # -- state plumbing (upsert protocol, one table per side) -------------
-
-    def _read_state(self, state_dir: str) -> DataFrame | None:
-        if not os.path.isdir(state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(state_dir)
-        ):
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(state_dir)
 
     def _merged_state(
         self, state: DataFrame | None, batch: DataFrame, keys: list[str]
@@ -103,15 +106,9 @@ class JoinViewSink:
             merged, keys=keys, order_by=self.order_by, drop_deletes=False
         )
 
-    def _write_state(self, state: DataFrame, state_dir: str, keys: list[str]) -> None:
-        bucketed = state.withColumn(
-            "bucket", F.pmod(F.hash(*keys), F.lit(self.n_buckets))
-        )
-        (
-            bucketed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(state_dir)
+    def _write_state(self, state: DataFrame, table: StateTable, keys: list[str]) -> None:
+        table.overwrite(
+            state.withColumn("bucket", F.pmod(F.hash(*keys), F.lit(self.n_buckets)))
         )
 
     # -- the incremental maintenance step --------------------------------
@@ -138,8 +135,8 @@ class JoinViewSink:
         self, left_batch: DataFrame, right_batch: DataFrame, batch_id: int = 0
     ) -> None:
         jk = self.join_key
-        l_state = self._read_state(self.left_dir)
-        r_state = self._read_state(self.right_dir)
+        l_state = self.left_state.read()
+        r_state = self.right_state.read()
 
         affected = (
             self._affected_join_keys(l_state, left_batch, self.left_keys)
@@ -151,15 +148,23 @@ class JoinViewSink:
         l_new = self._merged_state(l_state, left_batch, self.left_keys)
         r_new = self._merged_state(r_state, right_batch, self.right_keys)
 
-        # Served (non-tombstone) rows of each side, pruned to affected keys.
-        l_live = (
-            l_new.filter(F.col("op") != "d")
-            .join(F.broadcast(affected), jk, "left_semi")
-        )
-        r_live = (
-            r_new.filter(F.col("op") != "d")
-            .join(F.broadcast(affected), jk, "left_semi")
-        )
+        # Hash the join key at ONE type: the two sides may carry it as int
+        # and long, whose hashes differ.
+        key_type = affected.schema[jk].dataType
+        vbucket = F.pmod(F.hash(F.col(jk).cast(key_type)), F.lit(self.n_buckets))
+        vbuckets = affected.select(vbucket.alias("vbucket")).distinct()
+
+        def live(new: DataFrame) -> DataFrame:
+            """Served (non-tombstone) rows whose join key hashes into an
+            affected view bucket."""
+            return (
+                new.filter(F.col("op") != "d")
+                .withColumn("vbucket", vbucket)
+                .join(F.broadcast(vbuckets), "vbucket", "left_semi")
+            )
+
+        l_live = live(l_new)
+        r_live = live(r_new).drop("vbucket")
         overlap = set(l_live.columns) & set(r_live.columns) - {jk}
         r_sel = [F.col(jk)] + [
             F.col(c).alias(f"r_{c}" if c in overlap else c)
@@ -170,38 +175,20 @@ class JoinViewSink:
 
         # Sentinels: one null-keyed row per affected bucket so empty
         # recomputes still overwrite their partition.
-        sentinels = (
-            affected.select(
-                F.pmod(F.hash(jk), F.lit(self.n_buckets)).alias("vbucket")
-            )
-            .distinct()
-            .withColumn("_sentinel", F.lit(True))
-        )
-        out = (
-            pairs.withColumn(
-                "vbucket", F.pmod(F.hash(jk), F.lit(self.n_buckets))
-            )
-            .withColumn("_sentinel", F.lit(False))
-            .unionByName(sentinels, allowMissingColumns=True)
+        out = pairs.withColumn("_sentinel", F.lit(False)).unionByName(
+            vbuckets.withColumn("_sentinel", F.lit(True)), allowMissingColumns=True
         )
         # VIEW first, then states (see crash/replay protocol above).
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("vbucket")
-            .parquet(self.view_dir)
-        )
-        self._write_state(l_new, self.left_dir, self.left_keys)
-        self._write_state(r_new, self.right_dir, self.right_keys)
+        self.view_state.overwrite(out)
+        self._write_state(l_new, self.left_state, self.left_keys)
+        self._write_state(r_new, self.right_state, self.right_keys)
 
     # -- serving ----------------------------------------------------------
 
     def view(self) -> DataFrame | None:
-        if not os.path.isdir(self.view_dir) or not any(
-            name.startswith("vbucket=") for name in os.listdir(self.view_dir)
-        ):
+        df = self.view_state.read()
+        if df is None:
             return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.view_dir)
         return df.filter(~F.col("_sentinel")).drop("_sentinel", "vbucket")
 
     # -- streaming attachment (tagged union stream) -----------------------

@@ -103,42 +103,42 @@ class RetractRollupSink:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Merge one micro-batch of flat change rows (unwrap(keep_deletes=
         True) output) into rollup + key state."""
-        bucketed = self._state._bucket(batch_df)
-        touched = [r["bucket"] for r in bucketed.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        affected = bucketed.select(*self.keys).distinct()
-        state = self._state.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched))
-            old_rows = relevant.join(affected, self.keys, "left_semi")
-            merged = relevant.unionByName(bucketed, allowMissingColumns=True)
-        else:
-            old_rows = None
-            merged = bucketed
-        # Pin the merged state: it is read twice (rollup delta + state
-        # overwrite) and the second read must not see the first write.
-        new_state = latest_by_key(
-            merged, keys=self.keys, order_by=self._state.order_by, drop_deletes=False
-        ).localCheckpoint(eager=True)
+        # Persisted: the touched-bucket collect, the affected-key set and the
+        # merge each read the batch, and must not each re-run its plan.
+        bucketed = self._state._bucket(batch_df).persist()
+        try:
+            touched = [r["bucket"] for r in bucketed.select("bucket").distinct().collect()]
+            if not touched:
+                return
+            affected = bucketed.select(*self.keys).distinct()
+            state = self._state.read_state()
+            if state is not None:
+                relevant = state.filter(F.col("bucket").isin(touched))
+                old_rows = relevant.join(affected, self.keys, "left_semi")
+                merged = relevant.unionByName(bucketed, allowMissingColumns=True)
+            else:
+                old_rows = None
+                merged = bucketed
+            # Materialize the merged state: it is read twice (rollup delta +
+            # state overwrite) and the second read must not see the first write.
+            new_state = latest_by_key(
+                merged, keys=self.keys, order_by=self._state.order_by, drop_deletes=False
+            ).localCheckpoint(eager=True)
 
-        if not os.path.exists(self._marker(batch_id)):
-            new_contrib = self._contrib(
-                new_state.join(affected, self.keys, "left_semi"), +1
-            )
-            delta = new_contrib
-            if old_rows is not None:
-                delta = new_contrib.unionByName(self._contrib(old_rows, -1))
-            self._merge_rollup(delta)
-            os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-            open(self._marker(batch_id), "w").close()
+            if not os.path.exists(self._marker(batch_id)):
+                new_contrib = self._contrib(
+                    new_state.join(affected, self.keys, "left_semi"), +1
+                )
+                delta = new_contrib
+                if old_rows is not None:
+                    delta = new_contrib.unionByName(self._contrib(old_rows, -1))
+                self._merge_rollup(delta)
+                os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
+                open(self._marker(batch_id), "w").close()
 
-        (
-            new_state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self._state.state_dir)
-        )
+            self._state.table.overwrite(new_state)
+        finally:
+            bucketed.unpersist()
 
     def _merge_rollup(self, delta: DataFrame) -> None:
         delta = delta.withColumn(

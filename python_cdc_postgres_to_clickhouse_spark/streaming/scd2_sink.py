@@ -34,6 +34,10 @@ Design (mirrors streaming/upsert_sink.py's bucket protocol):
   (reference 7-day Kafka retention, debezium.json:24) — the same contract
   as tombstone compaction in the upsert sink.
 
+State I/O goes through ``state_table.StateTable``: reads apply the
+schema pinned in the state directory (no per-read footer job), and every
+write widens the pin before the data lands.
+
 Scale (100 TB): a micro-batch rewrites only the buckets it touches
 (dynamic partition overwrite); the recompute is one bucket-local window
 per touched bucket — cost tracks touched-key history length, not table
@@ -44,7 +48,6 @@ covering ts — both pushed to the scan.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -52,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.cdc import OP_DELETE
+from .state_table import StateTable
 
 
 class Scd2HistorySink:
@@ -75,6 +79,7 @@ class Scd2HistorySink:
         self.time_col = time_col
         self.op_col = op_col
         self.n_buckets = n_buckets
+        self.table = StateTable(spark, state_dir)
 
     # -- state I/O ---------------------------------------------------------
 
@@ -84,11 +89,7 @@ class Scd2HistorySink:
         )
 
     def read_state(self) -> DataFrame | None:
-        if not os.path.isdir(self.state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(self.state_dir)
-        ):
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(self.state_dir)
+        return self.table.read()
 
     def _recompute(self, rows: DataFrame) -> DataFrame:
         """Dedup by (keys, order) and re-derive validity intervals.
@@ -111,23 +112,22 @@ class Scd2HistorySink:
         drop_meta = [
             c for c in ("kafka_partition", "kafka_offset") if c in batch_df.columns
         ]
-        batch_df = self._bucket(batch_df.drop(*drop_meta))
-        touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        state = self.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched)).drop("valid_to_ms")
-            merged = relevant.unionByName(batch_df, allowMissingColumns=True)
-        else:
-            merged = batch_df
-        (
-            self._recompute(merged)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        # Persisted: the touched-bucket collect and the merge write both
+        # read the batch, and must not each re-run its plan.
+        batch_df = self._bucket(batch_df.drop(*drop_meta)).persist()
+        try:
+            touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
+            if not touched:
+                return
+            state = self.read_state()
+            if state is not None:
+                relevant = state.filter(F.col("bucket").isin(touched)).drop("valid_to_ms")
+                merged = relevant.unionByName(batch_df, allowMissingColumns=True)
+            else:
+                merged = batch_df
+            self.table.overwrite(self._recompute(merged))
+        finally:
+            batch_df.unpersist()
 
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
@@ -302,13 +302,7 @@ class Scd2HistorySink:
         )
         tmp = self.state_dir.rstrip("/") + ".compact.tmp"
         kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        final = self.spark.read.parquet(tmp)
-        (
-            final.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        self.table.replace(self.spark.read.schema(kept.schema).parquet(tmp))
         # Best-effort temp cleanup (local/dev path; object stores expire).
         import shutil
 

@@ -14,6 +14,13 @@ Scale design (100 TB):
   a crash. The merge is idempotent — latest-by-key over (state ∪ batch) with
   LSN ordering yields the same state when re-applied — so exactly-once
   *effects* hold without a transactional table format.
+- Schema (D5): the state's schema is pinned in ``_schema.json`` inside the
+  state directory (``state_table.StateTable``). Each merge first widens the
+  pin to the union of the pinned and the new rows' schema, then writes the
+  data, so a crash between the two leaves at worst an all-null extra
+  column; reads apply the pin and never infer a schema from the Parquet
+  footers. A state without a pin is inferred once with ``mergeSchema`` and
+  then pinned.
 - A real deployment would swap the Parquet state for Delta/Iceberg MERGE
   (jar not present in this container); the bucketed-overwrite pattern is the
   format-free equivalent.
@@ -21,7 +28,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from .state_table import StateTable
 
 
 class ParquetUpsertSink:
@@ -45,6 +52,7 @@ class ParquetUpsertSink:
         self.keys = list(keys)
         self.order_by = list(order_by)
         self.n_buckets = n_buckets
+        self.table = StateTable(spark, state_dir)
 
     def _bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -52,44 +60,41 @@ class ParquetUpsertSink:
         )
 
     def read_state(self) -> DataFrame | None:
-        if not os.path.isdir(self.state_dir) or not any(
-            name.startswith("bucket=") for name in os.listdir(self.state_dir)
-        ):
-            return None
-        # mergeSchema: schema-evolution tolerance (D5) — buckets written
-        # before a source column was added still read cleanly (nulls).
-        return self.spark.read.option("mergeSchema", "true").parquet(self.state_dir)
+        # Read under the pinned schema (D5): buckets written before a source
+        # column was added read it as null, and no footer job runs. The pin
+        # is widened before every data write; a state without one is
+        # inferred once with mergeSchema and pinned (state_table.py).
+        return self.table.read()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Merge one micro-batch of *flat change rows* into the state table."""
-        batch_df = self._bucket(batch_df)
-        touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        state = self.read_state()
-        if state is not None:
-            relevant = state.filter(F.col("bucket").isin(touched))
-            merged = relevant.unionByName(batch_df, allowMissingColumns=True)
-        else:
-            merged = batch_df
-        # Tombstones (op='d') STAY in the state table: a delete that wins in
-        # batch N must still outrank an out-of-order older update arriving in
-        # batch N+1 — dropping it here would resurrect the key. Deletes are
-        # filtered at read time (current_state); at scale a periodic compaction
-        # drops tombstones older than the source's replay horizon (the
-        # reference's 7-day Kafka retention, debezium.json:24).
-        new_state = latest_by_key(
-            merged, keys=self.keys, order_by=self.order_by, drop_deletes=False
-        )
-        # Dynamic partition overwrite: only the touched buckets are replaced.
-        # Per-write option, not the session conf — mutating the session would
-        # change overwrite semantics for unrelated writes in the application.
-        (
-            new_state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
-        )
+        # Persisted: the touched-bucket collect and the merge write would
+        # otherwise each re-run the streaming batch plan (dedup state store
+        # included).
+        batch_df = self._bucket(batch_df).persist()
+        try:
+            touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
+            if not touched:
+                return
+            state = self.read_state()
+            if state is not None:
+                relevant = state.filter(F.col("bucket").isin(touched))
+                merged = relevant.unionByName(batch_df, allowMissingColumns=True)
+            else:
+                merged = batch_df
+            # Tombstones (op='d') STAY in the state table: a delete that wins in
+            # batch N must still outrank an out-of-order older update arriving in
+            # batch N+1 — dropping it here would resurrect the key. Deletes are
+            # filtered at read time (current_state); at scale a periodic compaction
+            # drops tombstones older than the source's replay horizon (the
+            # reference's 7-day Kafka retention, debezium.json:24).
+            new_state = latest_by_key(
+                merged, keys=self.keys, order_by=self.order_by, drop_deletes=False
+            )
+            # Dynamic partition overwrite: only the touched buckets are replaced.
+            self.table.overwrite(new_state)
+        finally:
+            batch_df.unpersist()
 
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
@@ -157,4 +162,5 @@ class ParquetUpsertSink:
         # and dynamic mode would leave a bucket directory untouched when every
         # one of its rows is an expired tombstone (nothing written for that
         # partition → nothing replaced → the tombstones would survive forever).
-        compacted.write.mode("overwrite").partitionBy("bucket").parquet(self.state_dir)
+        # The overwrite deletes the pin too; replace() re-pins after the data.
+        self.table.replace(compacted)

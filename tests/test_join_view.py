@@ -227,3 +227,32 @@ def test_join_view_streaming_leg(spark, tmp_path):
         (r["pk"], r["val"], r["r_pk"], r["r_val"], r["k"]) for r in v.collect()
     }
     assert got == want
+
+
+def test_join_view_keeps_unaffected_keys_sharing_a_view_bucket(spark, tmp_path):
+    """A batch touching one join key rebuilds its whole view bucket: the
+    pairs of another key hashed into the same bucket must survive."""
+    sink = _mk(spark, tmp_path)
+    vb = {
+        k: r[0]
+        for k in range(4)
+        for r in spark.range(1)
+        .select(F.pmod(F.hash(F.lit(k).cast("long")), F.lit(sink.n_buckets)))
+        .collect()
+    }
+    shared = [(a, b) for a in vb for b in vb if a < b and vb[a] == vb[b]]
+    assert shared, "fixture needs two join keys in one view bucket"
+    a, b = shared[0]
+    l_ops = [
+        {"id": i, "k": k, "val": f"l{i}", "op": "c", "source_lsn": i, "kafka_offset": i}
+        for i, k in enumerate([a, b])
+    ]
+    r_ops = [
+        {"rid": i, "k": k, "val": f"r{i}", "op": "c", "source_lsn": i, "kafka_offset": i}
+        for i, k in enumerate([a, b])
+    ]
+    sink.process_batch(_ldf(spark, l_ops), _rdf(spark, r_ops), 0)
+    # Only key b is affected: an update of its left row.
+    upd = [{"id": 1, "k": b, "val": "l1v2", "op": "u", "source_lsn": 10, "kafka_offset": 10}]
+    sink.process_batch(_ldf(spark, upd), _rdf(spark, []), 1)
+    assert _sink_view(sink) == _py_view(l_ops + upd, r_ops)

@@ -60,16 +60,17 @@ def test_widen_device_is_bytes_scaled(spark):
     )
 
     par = spark.sparkContext.defaultParallelism
-    df = load_tables(spark, SF_ORACLE)["lineitem"]
+    # One input split, whatever the box: every widen assertion below runs.
+    df = load_tables(spark, SF_ORACLE)["lineitem"].coalesce(1)
     base_parts = df.rdd.getNumPartitions()
+    assert base_parts == 1 and par >= 2
 
     # SCAN profile: sf0.01 lineitem (1.04 MB) is below the 2 MB floor.
     assert widen_small_scan(df, input_bytes=1_042_463, profile=WIDEN_SCAN) is df
     # sf0.1 lineitem (10.8 MB) → bytes-scaled ~10 tasks, clamped.
     widened = widen_small_scan(df, input_bytes=10_818_932, profile=WIDEN_SCAN)
     expect = min(par, 10_818_932 // 1_000_000)
-    if expect >= 2 and base_parts < expect:
-        assert widened.rdd.getNumPartitions() == expect
+    assert widened.rdd.getNumPartitions() == expect
 
     # COMPUTE profile: sf0.01 documents (65 KB) is below the floor — the
     # driver-scale layout must be byte-identical.
@@ -77,8 +78,7 @@ def test_widen_device_is_bytes_scaled(spark):
     # sf0.1 documents (594 KB) widens, clamped to parallelism.
     w2 = widen_small_scan(df, input_bytes=594_568, profile=WIDEN_COMPUTE)
     expect2 = min(par, 594_568 // 8_192)
-    if base_parts < expect2:
-        assert w2.rdd.getNumPartitions() == expect2
+    assert w2.rdd.getNumPartitions() == expect2
 
     # Operator-internal call sites (no byte information): r13 behavior.
     w3 = widen_small_scan(df)

@@ -203,11 +203,18 @@ def test_sample_order_expr_matches_python_md5_rank(spark):
     assert got2 == want
 
 
-def test_resolve_oracle_caches_per_sf_dir():
+def test_resolve_oracle_caches_per_sf_dir(monkeypatch, tmp_path):
     """ADVICE r11 fix pinned: lazy oracle builders receive the
     compare-time sf_dir and the resolution is cached PER sf_dir — a
-    compare at one scale factor must not poison another's baked model."""
+    compare at one scale factor must not poison another's baked model.
+
+    The on-disk oracle cache points at an empty directory: an earlier run
+    (the suite, the benchmark) may already hold these entries in the
+    repository's cache, and then the builder would never be called."""
+    from python_cdc_postgres_to_clickhouse_spark import registry
     from python_cdc_postgres_to_clickhouse_spark.registry import QuerySpec
+
+    monkeypatch.setattr(registry, "_CACHE_DIR", tmp_path)
 
     calls = []
 
