@@ -143,7 +143,7 @@ _ENGINE_STRATEGY = {
                           "argument maps to the sink's ordering column",
     "SummingMergeTree": "streaming/retract_rollup.py RetractRollupSink "
                         "(incremental GROUP BY maintenance) or "
-                        "streaming/rollup_sink.py for append-only streams",
+                        "streaming/parts_rollup.py for append-only streams",
     "AggregatingMergeTree": "streaming/parts_rollup.py PartedRollupSink / "
                             "streaming/sketch_sink.py — partial aggregation "
                             "is the -State/-Merge equivalent",
@@ -659,7 +659,7 @@ def translate_mv(sql: str) -> MvPlan:
         strategy = (
             "streaming GROUP BY maintenance: foreachBatch into "
             "streaming/retract_rollup.py RetractRollupSink (changelog "
-            "sources) or streaming/rollup_sink.py / parts_rollup.py "
+            "sources) or streaming/parts_rollup.py PartedRollupSink "
             "(append-only); sketch columns -> streaming/sketch_sink.py"
         )
     elif base_engine == "ReplacingMergeTree":

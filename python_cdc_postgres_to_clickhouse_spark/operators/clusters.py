@@ -119,25 +119,34 @@ def connected_components(
     # jobs over near-empty partitions), not data. Collapsing a small edge
     # list to one partition makes every iteration a 1-task job chain
     # (measured ~4s → ~1s on a 256-edge graph at sf0.1); big graphs keep
-    # full parallelism. The count is free — the checkpoint above already
-    # materialized the edges.
+    # full parallelism. This count materializes the persisted edges.
     n_edges = edges.count()
-    if n_edges <= DRIVER_UNION_FIND_EDGES:
-        # Solve on the driver: the edge list is checkpoint-materialized and
-        # bounded, so this collect is a constant-size transfer (same bound
-        # the coalesce ladder below uses) and replaces O(log d) rounds of
-        # ~5 jobs each with one in-memory pass. Output labeling is
-        # identical (component = min vertex id) — asserted against the
-        # distributed path in tests.
-        utype = edges.schema["u"].dataType
-        labeled = _driver_union_find([(r["u"], r["v"]) for r in edges.collect()])
-        spark = edges.sparkSession
-        schema = T.StructType(
-            [T.StructField("vertex", utype), T.StructField("component", utype)]
+    try:
+        if n_edges <= DRIVER_UNION_FIND_EDGES:
+            # Solve on the driver: the edge list is persisted and bounded,
+            # so this collect is a constant-size transfer (same bound the
+            # coalesce ladder below uses) and replaces O(log d) rounds of
+            # ~5 jobs each with one in-memory pass. Output labeling is
+            # identical (component = min vertex id) — asserted against the
+            # distributed path in tests.
+            utype = edges.schema["u"].dataType
+            labeled = _driver_union_find([(r["u"], r["v"]) for r in edges.collect()])
+            schema = T.StructType(
+                [T.StructField("vertex", utype), T.StructField("component", utype)]
+            )
+            return edges.sparkSession.createDataFrame(labeled, schema)
+        return _propagate_labels(
+            edges.coalesce(1) if n_edges <= SMALL_GRAPH_EDGES else edges,
+            max_iterations,
         )
-        return spark.createDataFrame(labeled, schema)
-    if n_edges <= SMALL_GRAPH_EDGES:
-        edges = edges.coalesce(1)
+    finally:
+        # Both paths are done with the edge list: the driver path holds its
+        # labels locally, the loop returns localCheckpointed labels.
+        edges.unpersist()
+
+
+def _propagate_labels(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Min-label propagation + pointer jumping to fixpoint over (u, v)."""
     labels = (
         edges.select(F.col("u").alias("vertex"))
         .distinct()

@@ -31,11 +31,11 @@ This sink maintains that index incrementally:
   of the SET of seen ids — independent of batch boundaries, arrival
   order, and partition layout (asserted in tests/test_ann_sink.py).
 - **Compaction + serve.** ``compact()`` folds live parts into a new base
-  version committed by one atomic manifest rename (parts_rollup's
-  crash-safety argument carries over verbatim — every crash point leaves
-  the manifest naming a fully-written base). ``serve()`` unions base +
-  live parts; ``topk()`` probes each generation with its own model via
-  the batch ``ivfpq_topk`` operator and merges per-query results.
+  version committed by one atomic manifest replace — the
+  ``parts_log.PartsLog`` protocol ``parts_rollup`` shares, crash-safe at
+  every point. ``serve()`` unions base + live parts; ``topk()`` probes
+  each generation with its own model via the batch ``ivfpq_topk``
+  operator and merges per-query results.
 
 At 100 TB: index rows are (4 + m) bytes and never rewritten; the sample
 is ≤ sample_k rows per part and collapses at compaction; models are
@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +61,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.pq import ivfpq_encode, ivfpq_fit, ivfpq_topk
 from ..operators.similarity import sample_order_expr
+from . import start_foreach_batch
+from .parts_log import PartsLog
 
 
 class IvfPqIndexSink:
@@ -91,10 +93,8 @@ class IvfPqIndexSink:
         model: "tuple[np.ndarray, np.ndarray] | None" = None,
     ):
         self.spark = spark
-        self.index_dir = index_dir
-        self.parts_dir = os.path.join(index_dir, "parts")
+        self.log = PartsLog(index_dir)
         self.models_dir = os.path.join(index_dir, "models")
-        self._manifest_path = os.path.join(index_dir, "MANIFEST")
         self.n_cells, self.m, self.k = n_cells, m, k
         self.n_iters, self.seed, self.sample_k = n_iters, seed, sample_k
         self.vec_col, self.id_col = vec_col, id_col
@@ -137,33 +137,6 @@ class IvfPqIndexSink:
     def _fit(self, X: "np.ndarray"):
         return ivfpq_fit(X, self.n_cells, self.m, self.k, self.n_iters, self.seed)
 
-    # -- manifest / parts (the parts_rollup protocol) ---------------------
-
-    def _manifest(self) -> tuple[int, int]:
-        """(base_version, watermark); parts ≤ watermark are folded."""
-        try:
-            with open(self._manifest_path) as fh:
-                v, wm = fh.read().split()
-                return int(v), int(wm)
-        except FileNotFoundError:
-            return -1, -1
-
-    def _base_dir(self, version: int) -> str:
-        return os.path.join(self.index_dir, f"base_v{version}")
-
-    def _part_ids(self) -> list[int]:
-        if not os.path.isdir(self.parts_dir):
-            return []
-        return sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(self.parts_dir)
-            if name.startswith("batch=")
-        )
-
-    def _live_part_ids(self) -> list[int]:
-        _, wm = self._manifest()
-        return [i for i in self._part_ids() if i > wm]
-
     # -- batch processing -------------------------------------------------
 
     def _sample_candidates(self, df: DataFrame) -> DataFrame:
@@ -180,9 +153,8 @@ class IvfPqIndexSink:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        _, wm = self._manifest()
-        if batch_id <= wm:
-            return  # folded by compaction — watermark-skip on replay
+        if self.log.is_folded(batch_id):
+            return
         sample = self._sample_candidates(batch_df).localCheckpoint(eager=True)
         versions = self._model_versions()
         if not versions:
@@ -196,7 +168,7 @@ class IvfPqIndexSink:
             versions = [0]
         version = versions[-1]
         cells, books = self.load_model(version)
-        part = os.path.join(self.parts_dir, f"batch={batch_id}")
+        part = self.log.part_dir(batch_id)
         enc = ivfpq_encode(
             batch_df, cells, books, vec_col=self.vec_col, id_col=self.id_col
         ).withColumn("model_version", F.lit(version))
@@ -208,65 +180,29 @@ class IvfPqIndexSink:
     def attach(
         self, vectors: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            vectors.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(vectors, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     # -- read / search ----------------------------------------------------
 
-    def _frames(self, part_ids: list[int], leaf: str) -> list[DataFrame]:
-        version, _ = self._manifest()
-        frames = []
-        base = (
-            os.path.join(self._base_dir(version), leaf) if version >= 0 else None
-        )
-        if base is not None and os.path.isdir(base):
-            frames.append(self.spark.read.parquet(base))
-        # A crash between a part's two leaf writes can leave one leaf
-        # missing until the stream replays the batch — skip it rather
-        # than fail the read (the replay rewrites the part whole before
-        # the batch's offsets commit).
-        paths = [
-            p
-            for i in part_ids
-            if os.path.isdir(
-                p := os.path.join(self.parts_dir, f"batch={i}", leaf)
-            )
-        ]
-        if paths:
-            frames.append(self.spark.read.parquet(*paths))
-        return frames
-
-    @staticmethod
-    def _union(frames: list[DataFrame]) -> "DataFrame | None":
-        if not frames:
-            return None
-        df = frames[0]
-        for other in frames[1:]:
-            df = df.unionByName(other)
-        return df
+    def _read(self, part_ids: list[int], leaf: str) -> "DataFrame | None":
+        """Base ⊎ the given parts' ``leaf`` rows."""
+        paths = self.log.paths(part_ids, leaf)
+        return self.spark.read.parquet(*paths) if paths else None
 
     def serve(self) -> "DataFrame | None":
         """The index: (id, cell, codes, model_version) — base ⊎ live parts."""
-        return self._union(self._frames(self._live_part_ids(), "codes"))
+        return self._read(self.log.live_part_ids(), "codes")
 
     def _current_sample(self) -> "DataFrame | None":
         """Global lowest-``sample_k`` by md5 rank over base ⊎ live part
         samples — the lowest-k of a union of per-part lowest-k sets is
         exactly the global lowest-k of every id ever seen."""
-        df = self._union(self._frames(self._live_part_ids(), "sample"))
-        if df is None:
-            return None
+        df = self._read(self.log.live_part_ids(), "sample")
+        return None if df is None else self._lowest_k(df)
+
+    def _lowest_k(self, sample: DataFrame) -> DataFrame:
         return (
-            df.withColumn(
-                "rank_key", sample_order_expr(self.seed, self.id_col)
-            )
+            sample.withColumn("rank_key", sample_order_expr(self.seed, self.id_col))
             .orderBy("rank_key")
             .limit(self.sample_k)
             .drop("rank_key")
@@ -301,7 +237,7 @@ class IvfPqIndexSink:
                     query_id_col=self.id_col, corpus_id_col=self.id_col,
                 ).select("query_id", "neighbor_id", "approx_d2")
             )
-        merged = self._union(frames)
+        merged = reduce(DataFrame.unionByName, frames)
         w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
         return (
             merged.withColumn("rank", F.row_number().over(w))
@@ -313,36 +249,17 @@ class IvfPqIndexSink:
     def compact(self, through_batch_id: "int | None" = None) -> None:
         """Fold live parts into a new base version (codes concatenated
         per generation — never re-encoded; samples reduced to the global
-        lowest-k), committed by one atomic manifest rename. Crash-safe at
-        every point by the parts_rollup argument: before the rename the
-        old manifest still names a complete base; re-running rebuilds the
-        same new base from the same inputs."""
-        version, wm = self._manifest()
-        ids = [i for i in self._part_ids() if i > wm]
-        if through_batch_id is not None:
-            ids = [i for i in ids if i <= through_batch_id]
-        if not ids:
-            self._gc(version, wm)
-            return
-        codes = self._union(self._frames(ids, "codes"))
-        sample = (
-            self._union(self._frames(ids, "sample"))
-            .withColumn("rank_key", sample_order_expr(self.seed, self.id_col))
-            .orderBy("rank_key")
-            .limit(self.sample_k)
-            .drop("rank_key")
-        )
-        new_version = version + 1
-        nd = self._base_dir(new_version)
-        codes.write.mode("overwrite").parquet(os.path.join(nd, "codes"))
-        sample.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(nd, "sample")
-        )
-        tmp = self._manifest_path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(f"{new_version} {max(ids)}")
-        os.replace(tmp, self._manifest_path)
-        self._gc(new_version, max(ids))
+        lowest-k), committed by ``PartsLog.compact``."""
+
+        def write_base(ids: list[int], base: str) -> None:
+            self._read(ids, "codes").write.mode("overwrite").parquet(
+                os.path.join(base, "codes")
+            )
+            self._lowest_k(self._read(ids, "sample")).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(base, "sample"))
+
+        self.log.compact(write_base, through_batch_id)
 
     def refresh(self) -> int:
         """Centroid/codebook refresh: fold everything live (closing the
@@ -375,35 +292,16 @@ class IvfPqIndexSink:
         cells, books = self._fit(X)
         new_model = (self._model_versions()[-1] + 1) if self._model_versions() else 0
         self._write_model(new_model, cells, books)
-        version, _ = self._manifest()
-        new_version = version + 1
-        nd = self._base_dir(new_version)
-        enc = ivfpq_encode(
-            source, cells, books, vec_col=self.vec_col, id_col=self.id_col
-        ).withColumn("model_version", F.lit(new_model))
-        enc.write.mode("overwrite").parquet(os.path.join(nd, "codes"))
-        self._sample_candidates(source).drop("rank_key").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(nd, "sample"))
-        wm = max(self._part_ids(), default=-1)
-        tmp = self._manifest_path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as fh:
-            fh.write(f"{new_version} {wm}")
-        os.replace(tmp, self._manifest_path)
-        self._gc(new_version, wm)
-        return new_model
 
-    def _gc(self, live_version: int, watermark: int) -> None:
-        if not os.path.isdir(self.index_dir):
-            return
-        for i in self._part_ids():
-            if i <= watermark:
-                shutil.rmtree(
-                    os.path.join(self.parts_dir, f"batch={i}"),
-                    ignore_errors=True,
-                )
-        for name in os.listdir(self.index_dir):
-            if name.startswith("base_v") and name != f"base_v{live_version}":
-                shutil.rmtree(
-                    os.path.join(self.index_dir, name), ignore_errors=True
-                )
+        def write_base(base: str) -> None:
+            ivfpq_encode(
+                source, cells, books, vec_col=self.vec_col, id_col=self.id_col
+            ).withColumn("model_version", F.lit(new_model)).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(base, "codes"))
+            self._sample_candidates(source).drop("rank_key").coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(base, "sample"))
+
+        self.log.replace_base(write_base)
+        return new_model

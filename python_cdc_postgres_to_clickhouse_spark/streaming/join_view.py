@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from . import start_foreach_batch
 from .state_table import StateTable
 
 
@@ -203,18 +204,10 @@ class JoinViewSink:
         """Drive from ONE stream carrying both sides, tagged 'l'/'r' in
         ``side_col`` (two independent streaming queries could not
         coordinate a single consistent batch)."""
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
 
         def _step(batch_df: DataFrame, batch_id: int) -> None:
             l = batch_df.filter(F.col(side_col) == "l").drop(side_col)
             r = batch_df.filter(F.col(side_col) == "r").drop(side_col)
             self.process_batch(l, r, batch_id)
 
-        return (
-            tagged_changes.writeStream.foreachBatch(_step)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(tagged_changes, _step, checkpoint_dir, trigger_kwargs)

@@ -45,6 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup as D
 from ..operators.textstats import portable_hash32, tokens
+from . import start_foreach_batch
 
 
 def _signatures(docs: DataFrame, n_hashes: int, shingle: int, id_col: str, text_col: str) -> DataFrame:
@@ -269,12 +270,4 @@ class StreamingNearDupFilter:
     def attach(
         self, doc_stream: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            doc_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(doc_stream, self.process_batch, checkpoint_dir, trigger_kwargs)

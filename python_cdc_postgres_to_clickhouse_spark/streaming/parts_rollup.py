@@ -1,44 +1,38 @@
 """Parts-based rollup sink: exactly-once additive aggregation, no txn format.
 
-``rollup_sink.HourlyRollupSink`` merges each micro-batch into its rollup
-state in place; because an additive merge is not idempotent, a crash between
-the state write and its marker leaves an at-least-once residual (documented
-there). This sink closes that window with the MergeTree parts model the
-provisioned destination actually uses (reference docker-compose.yml:155-166):
+An additive merge is not idempotent: a rollup merged into its state in
+place double-counts a replayed batch unless a marker guards it, and a crash
+between the state write and the marker still leaves an at-least-once window
+(the marker sinks ``retract_rollup`` and ``projection_sink`` document it).
+This sink closes that window with the MergeTree parts model the provisioned
+destination actually uses (reference docker-compose.yml:155-166), kept by
+``parts_log.PartsLog``:
 
-- **Insert = part.** Batch N writes its partial aggregate to
-  ``parts/batch=N/`` — never merging in place. Spark's replay contract makes
-  batch N's content deterministic (checkpointed offsets ⇒ same rows), so a
-  replayed batch overwrites the SAME part with the SAME bytes: idempotent
-  by construction, no marker, no residual window.
+- **Insert = part.** Batch N writes its partial aggregate to its own part,
+  never merging in place; a replayed batch overwrites the same part with
+  the same rows.
 - **SELECT = merge at read.** ``serve()`` unions base + live parts and sums
   — ClickHouse's AggregatingMergeTree read semantics. Cost is O(live
   parts), bounded by compaction.
-- **Background merge = compaction.** ``compact()`` folds parts into a NEW
-  base version and commits it with one atomic manifest rename; old
-  versions and folded parts are garbage, removed best-effort afterwards.
-  The manifest records ``(base_version, watermark)``; a replayed batch at
-  or below the watermark is skipped (its effect is already in base), which
-  keeps compaction and replay commutative. Every crash point leaves the
-  manifest naming a fully-written base, so there is no torn-state window
-  anywhere in the protocol.
+- **Background merge = compaction.** ``compact()`` folds parts into a new
+  base version committed by one atomic manifest replace; a replayed batch
+  at or below the manifest's watermark is skipped (its effect is already
+  in base), which keeps compaction and replay commutative.
 
 At 100 TB: each part is a few-KB-to-MB partial aggregate (one row per
 (bucket, dims) the batch touched), the stream never rewrites history, and
 compaction is a bounded background job — the same write-amplification
-profile as a MergeTree insert path. The manifest is a one-line file: this
-is the minimal transactional log a real deployment would get from
-Delta/Iceberg, reimplemented format-free.
+profile as a MergeTree insert path.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from . import start_foreach_batch
+from .parts_log import PartsLog
 
 _N_T = "bigint"
 _SUM_T = "decimal(38,6)"
@@ -50,11 +44,7 @@ class PartedRollupSink:
 
     def __init__(self, spark: SparkSession, rollup_dir: str):
         self.spark = spark
-        self.rollup_dir = rollup_dir
-        self.parts_dir = os.path.join(rollup_dir, "parts")
-        self._manifest_path = os.path.join(rollup_dir, "MANIFEST")
-
-    # -- partials ---------------------------------------------------------
+        self.log = PartsLog(rollup_dir)
 
     @staticmethod
     def _partials(df: DataFrame) -> DataFrame:
@@ -71,91 +61,38 @@ class PartedRollupSink:
             )
         )
 
-    # -- manifest ---------------------------------------------------------
-
-    def _manifest(self) -> tuple[int, int]:
-        """(base_version, watermark); (-1, -1) before the first compaction.
-        Parts with batch_id ≤ watermark are folded into base/v=version."""
-        try:
-            with open(self._manifest_path) as fh:
-                v, wm = fh.read().split()
-                return int(v), int(wm)
-        except FileNotFoundError:
-            return -1, -1
-
-    def _base_dir(self, version: int) -> str:
-        return os.path.join(self.rollup_dir, f"base_v{version}")
-
-    def _part_ids(self) -> list[int]:
-        if not os.path.isdir(self.parts_dir):
-            return []
-        return sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(self.parts_dir)
-            if name.startswith("batch=")
-        )
-
-    def _live_part_ids(self) -> list[int]:
-        _, wm = self._manifest()
-        return [i for i in self._part_ids() if i > wm]
-
-    # -- batch processing -------------------------------------------------
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        _, wm = self._manifest()
-        if batch_id <= wm:
-            # Effect already folded into base by compaction — a replayed
-            # write here would double-count at serve time.
+        if self.log.is_folded(batch_id):
             return
-        part = os.path.join(self.parts_dir, f"batch={batch_id}")
-        # Deterministic content + fixed path ⇒ replay is a byte-identical
-        # overwrite. mode=overwrite also heals a torn part from a crash
-        # mid-write (the part is rewritten whole before the stream commits
-        # batch N's offsets).
-        self._partials(batch_df).coalesce(1).write.mode("overwrite").parquet(part)
+        # mode=overwrite also heals a torn part from a crash mid-write (the
+        # part is rewritten whole before the stream commits the offsets).
+        self._partials(batch_df).coalesce(1).write.mode("overwrite").parquet(
+            self.log.part_dir(batch_id)
+        )
 
     def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
+        return start_foreach_batch(events, self.process_batch, checkpoint_dir, trigger_kwargs)
+
+    def _merged(self, part_ids: list[int]) -> DataFrame | None:
+        """Base ⊎ the given parts, summed per (bucket, event_type)."""
+        paths = self.log.paths(part_ids)
+        if not paths:
+            return None
         return (
-            events.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
-
-    # -- read + compaction ------------------------------------------------
-
-    def _merged(self, frames: list[DataFrame]) -> DataFrame:
-        df = frames[0]
-        for other in frames[1:]:
-            df = df.unionByName(other)
-        return df.groupBy("bucket", "event_type").agg(
-            F.sum("n_events").cast(_N_T).alias("n_events"),
-            F.sum("sum_value").cast(_SUM_T).alias("sum_value"),
-        )
-
-    def _frames(self, part_ids: list[int]) -> list[DataFrame]:
-        version, _ = self._manifest()
-        frames = []
-        if version >= 0:
-            frames.append(self.spark.read.parquet(self._base_dir(version)))
-        if part_ids:
-            frames.append(
-                self.spark.read.parquet(
-                    *[os.path.join(self.parts_dir, f"batch={i}") for i in part_ids]
-                )
+            self.spark.read.parquet(*paths)
+            .groupBy("bucket", "event_type")
+            .agg(
+                F.sum("n_events").cast(_N_T).alias("n_events"),
+                F.sum("sum_value").cast(_SUM_T).alias("sum_value"),
             )
-        return frames
+        )
 
     def serve(self) -> DataFrame | None:
         """Merge-at-read: base ⊎ live parts, summed — AggregatingMergeTree's
         SELECT semantics. Derived metrics from the partials."""
-        frames = self._frames(self._live_part_ids())
-        if not frames:
+        r = self._merged(self.log.live_part_ids())
+        if r is None:
             return None
-        r = self._merged(frames)
         return r.select(
             "bucket",
             "event_type",
@@ -168,42 +105,9 @@ class PartedRollupSink:
 
     def compact(self, through_batch_id: int | None = None) -> None:
         """Fold live parts ≤ ``through_batch_id`` (default: all) into a new
-        base version, commit it with one atomic manifest replace, then
-        garbage-collect. Crash-safe at every point:
+        base version (see ``PartsLog.compact`` for crash safety)."""
 
-        - during the new base write: manifest still names the old version;
-          serve is unaffected; re-running compact overwrites the half-built
-          directory from the SAME inputs (old base + same parts).
-        - after the manifest commit: serve reads the new version; the old
-          base and folded parts are ignored garbage until removed (either
-          by this run's cleanup or the next compact's sweep).
-        """
-        version, wm = self._manifest()
-        ids = [i for i in self._part_ids() if i > wm]
-        if through_batch_id is not None:
-            ids = [i for i in ids if i <= through_batch_id]
-        if not ids:
-            self._gc(version, wm)
-            return
-        merged = self._merged(self._frames(ids))
-        new_version = version + 1
-        merged.coalesce(1).write.mode("overwrite").parquet(self._base_dir(new_version))
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"{new_version} {max(ids)}")
-        os.replace(tmp, self._manifest_path)
-        self._gc(new_version, max(ids))
+        def write_base(ids: list[int], base: str) -> None:
+            self._merged(ids).coalesce(1).write.mode("overwrite").parquet(base)
 
-    def _gc(self, live_version: int, watermark: int) -> None:
-        """Remove folded parts and superseded base versions (best-effort —
-        anything missed is swept by the next compact)."""
-        if not os.path.isdir(self.rollup_dir):
-            return
-        for i in self._part_ids():
-            if i <= watermark:
-                shutil.rmtree(
-                    os.path.join(self.parts_dir, f"batch={i}"), ignore_errors=True
-                )
-        for name in os.listdir(self.rollup_dir):
-            if name.startswith("base_v") and name != f"base_v{live_version}":
-                shutil.rmtree(os.path.join(self.rollup_dir, name), ignore_errors=True)
+        self.log.compact(write_base, through_batch_id)

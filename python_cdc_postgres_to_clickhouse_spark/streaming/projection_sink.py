@@ -16,7 +16,7 @@ through the Hadoop FileSystem API so remote state dirs behave — the
 sketch-sink lesson) make the common replay path (state committed, stream
 checkpoint not) a no-op; the residual crash window between state write and
 marker write stays at-least-once, closable only by a transactional table
-format (same contract, and same docstring honesty, as rollup_sink).
+format (same contract, and same docstring honesty, as retract_rollup).
 
 At 100 TB: state size is |distinct keys|, independent of stream volume;
 with ``partition_key`` set (one of the projection keys) each merge touches
@@ -27,7 +27,7 @@ a full non-dynamic overwrite deletes the input path before the job runs).
 
 Decimal note: Spark widens decimal sums per aggregation level — pin sum
 measures to a fixed decimal type (or use integer cents) or re-merged
-states drift in parquet schema across batches (the rollup_sink lesson).
+states drift in parquet schema across batches (the parts_rollup lesson).
 """
 
 from __future__ import annotations
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.projection import Projection, build_projection
+from . import start_foreach_batch
 
 
 class ProjectionSink:
@@ -118,15 +119,7 @@ class ProjectionSink:
 
     def attach(self, stream: DataFrame, checkpoint_dir: str,
                **trigger_kwargs) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(stream, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     # -- reads ----------------------------------------------------------------
     def projection(self) -> Projection:

@@ -1,6 +1,6 @@
 """Retractable rollup sink: incremental aggregates under updates & deletes.
 
-``rollup_sink.HourlyRollupSink`` maintains additive partials over an
+``parts_rollup.PartedRollupSink`` maintains additive partials over an
 APPEND-ONLY event stream. A CDC changelog is not append-only: updates move
 rows between groups and change metric values, deletes retract them. This
 sink maintains
@@ -29,7 +29,8 @@ state merge is idempotent (latest-by-key). Deriving the delta the other
 way round — state first, delta on replay — would compute old = new and
 lose the batch's effect forever. The residual window (crash between the
 rollup parquet write and its marker) remains at-least-once, the same
-honest bound as rollup_sink.py; closing it needs a transactional format.
+honest bound as projection_sink.py; closing it needs a transactional
+format or parts_rollup's parts log.
 
 Scale (100 TB): per batch the sink reads only the state buckets the batch
 touches, semi-joins to the batch's keys, and touches only the rollup
@@ -46,10 +47,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from . import start_foreach_batch
 from .upsert_sink import ParquetUpsertSink
 
 # Fixed partial types: decimal widths must not drift across batches or the
-# rollup partitions stop reading together (same pitfall as rollup_sink.py).
+# rollup partitions stop reading together (same pitfall as parts_rollup.py).
 _N_T = "bigint"
 _SUM_T = "decimal(38,0)"
 
@@ -175,15 +177,7 @@ class RetractRollupSink:
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            changes.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(changes, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     def serve(self) -> DataFrame | None:
         """Live per-group aggregates; groups whose rows all retracted away

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.cdc import OP_DELETE
+from . import start_foreach_batch
 from .state_table import StateTable
 
 
@@ -132,15 +133,7 @@ class Scd2HistorySink:
     def attach(
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            changes.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(changes, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     # -- serving reads -----------------------------------------------------
 

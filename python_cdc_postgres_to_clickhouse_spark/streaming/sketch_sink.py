@@ -12,8 +12,8 @@ register-wise max, so merging is idempotent AND associative —
 
 A replayed micro-batch (crash between state write and stream checkpoint)
 leaves the state bit-identical, with NO applied-batch markers — contrast
-``rollup_sink.HourlyRollupSink``, whose additive partials double-count on
-replay and need marker files. Chunked ingestion equals a monolithic build
+the additive sinks (``projection_sink``, ``retract_rollup``), whose partials
+double-count on replay and need marker files. Chunked ingestion equals a monolithic build
 exactly (test-asserted), so the serving estimates are reproducible
 regardless of how the stream was batched.
 
@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from . import start_foreach_batch
 
 HLL_LGK = 12
 
@@ -93,15 +95,7 @@ class DistinctSketchSink:
         )
 
     def attach(self, events: DataFrame, checkpoint_dir: str, **trigger_kwargs) -> StreamingQuery:
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            events.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(events, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     def serve(self) -> DataFrame:
         """Per-bucket distinct-user estimates from the stored sketches."""

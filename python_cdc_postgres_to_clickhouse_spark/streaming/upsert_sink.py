@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.upsert import latest_by_key
+from . import start_foreach_batch
 from .state_table import StateTable
 
 
@@ -100,15 +101,7 @@ class ParquetUpsertSink:
         self, changes: DataFrame, checkpoint_dir: str, **trigger_kwargs
     ) -> StreamingQuery:
         """Start the continuous upsert: changes stream → bucketed state."""
-        if not trigger_kwargs:
-            trigger_kwargs = {"availableNow": True}
-        return (
-            changes.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(**trigger_kwargs)
-            .start()
-        )
+        return start_foreach_batch(changes, self.process_batch, checkpoint_dir, trigger_kwargs)
 
     def current_state(self) -> DataFrame | None:
         state = self.read_state()

@@ -105,7 +105,7 @@ def test_stream_attach_and_topk_matches_batch_operator(spark, tmp_path):
     sink = _sink(spark, tmp_path, "idx", model=model)
     q = sink.attach(stream, checkpoint_dir=str(tmp_path / "ckpt"))
     assert q.awaitTermination(120)
-    assert len(sink._part_ids()) >= 2, "expected multiple micro-batch parts"
+    assert len(sink.log.part_ids()) >= 2, "expected multiple micro-batch parts"
 
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     got = {
@@ -139,10 +139,10 @@ def test_replay_idempotent_and_watermark_skip(spark, tmp_path):
     sink.compact(through_batch_id=1)
     for i in (0, 1, 2):
         sink.process_batch(chunks[i], i)
-    assert sink._part_ids() == [2]
+    assert sink.log.part_ids() == [2]
     assert _index_set(sink) == exp
     sink.compact()
-    assert sink._part_ids() == []
+    assert sink.log.part_ids() == []
     assert _index_set(sink) == exp
 
 
@@ -212,11 +212,11 @@ def test_refresh_creates_generation_and_closes_replay_window(spark, tmp_path):
     assert new_v == 1
     # refresh folded everything: pre-refresh rows unchanged, watermark set.
     assert _index_set(sink) == pre
-    assert sink._part_ids() == []
+    assert sink.log.part_ids() == []
     # A replayed pre-refresh batch is watermark-skipped — it must NOT be
     # re-encoded under the new generation.
     sink.process_batch(chunks[0], 0)
-    assert sink._part_ids() == []
+    assert sink.log.part_ids() == []
     assert _index_set(sink) == pre
     # New batches encode under generation 1; both generations serve.
     sink.process_batch(chunks[2], 2)
@@ -261,7 +261,7 @@ def test_rebuild_resets_to_single_generation(spark, tmp_path):
     assert served.count() == _emb(spark).count()
     # Pre-rebuild batches replay as watermark-skips.
     sink.process_batch(chunks[0], 0)
-    assert sink._part_ids() == []
+    assert sink.log.part_ids() == []
 
 
 def test_torn_part_read_resilience_and_heal(spark, tmp_path):
@@ -275,9 +275,9 @@ def test_torn_part_read_resilience_and_heal(spark, tmp_path):
     sink.process_batch(chunks[1], 1)
     exp = _index_set(sink)
     # Tear batch 1's sample leaf.
-    shutil.rmtree(os.path.join(sink.parts_dir, "batch=1", "sample"))
+    shutil.rmtree(os.path.join(sink.log.part_dir(1), "sample"))
     assert _index_set(sink) == exp  # codes still serve
     assert sink._current_sample() is not None  # sample read skips the tear
     sink.process_batch(chunks[1], 1)  # replay heals
-    assert os.path.isdir(os.path.join(sink.parts_dir, "batch=1", "sample"))
+    assert os.path.isdir(os.path.join(sink.log.part_dir(1), "sample"))
     assert _index_set(sink) == exp

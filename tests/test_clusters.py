@@ -150,3 +150,33 @@ def test_stateful_running_user_stats(spark, tmp_path):
         .collect()
     }
     assert got == exp
+
+
+def test_connected_components_releases_its_edge_list(spark, monkeypatch):
+    """Neither path leaves the persisted edge list behind. The only new
+    persistent RDDs allowed are the loop's locally checkpointed labels,
+    which the context cleaner releases once unreachable. Vertex ids are
+    unique to this test, so no other test's cached plan can stand in."""
+    from python_cdc_postgres_to_clickhouse_spark.operators import clusters as C
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        m = jsc.getPersistentRDDs()
+        return {int(k): m[k] for k in m.keySet().toArray()}
+
+    for offset, gate in ((7_000_000, None), (8_000_000, 0)):
+        if gate is not None:
+            monkeypatch.setattr(C, "DRIVER_UNION_FIND_EDGES", gate)
+        pairs = spark.createDataFrame(
+            [(offset + i, offset + i + 1) for i in range(30)], ["a", "b"]
+        )
+        before = set(persistent())
+        got = {r["vertex"]: r["component"] for r in connected_components(pairs).collect()}
+        assert got == {offset + i: offset for i in range(31)}
+        left = [
+            rid
+            for rid, rdd in persistent().items()
+            if rid not in before and not rdd.rdd().isLocallyCheckpointed()
+        ]
+        assert left == [], f"gate={gate}: persisted RDDs left behind: {left}"

@@ -1,15 +1,19 @@
-"""Parts-based rollup sink: exactly-once via deterministic part overwrite +
-atomic manifest compaction — every crash/replay interleaving converges."""
+"""Parts-based sinks: exactly-once via deterministic part overwrite +
+atomic manifest compaction — every crash/replay interleaving converges.
+The crash matrix runs over both sinks on the shared parts log."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from python_cdc_postgres_to_clickhouse_spark.streaming.parts_log import PartsLog
 from python_cdc_postgres_to_clickhouse_spark.streaming.parts_rollup import PartedRollupSink
 from python_cdc_postgres_to_clickhouse_spark.tables import load_tables
 
+from . import test_ann_sink as ann
 from .conftest import SF_ORACLE
 
 
@@ -52,7 +56,7 @@ def _chunks(events, n):
     ]
 
 
-def test_streaming_matches_batch_and_inplace_sink(spark, tmp_path):
+def test_streaming_matches_batch(spark, tmp_path):
     events = _events(spark)
     src = str(tmp_path / "ev")
     events.repartition(6).write.parquet(src)
@@ -64,12 +68,12 @@ def test_streaming_matches_batch_and_inplace_sink(spark, tmp_path):
     sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
     q = sink.attach(stream, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
-    assert len(sink._part_ids()) >= 2, "expected multiple micro-batch parts"
+    assert len(sink.log.part_ids()) >= 2, "expected multiple micro-batch parts"
     assert _served(sink) == _expected(events)
     # Compaction folds every part into base_v0 and serve is unchanged.
     sink.compact()
-    assert sink._part_ids() == []
-    assert sink._manifest()[0] == 0
+    assert sink.log.part_ids() == []
+    assert sink.log.manifest()[0] == 0
     assert _served(sink) == _expected(events)
 
 
@@ -91,61 +95,128 @@ def test_replay_is_idempotent_before_and_after_compaction(spark, tmp_path):
     sink.compact(through_batch_id=2)
     for i in (1, 2, 3):
         sink.process_batch(chunks[i], i)
-    assert sink._part_ids() == [3]
+    assert sink.log.part_ids() == [3]
     assert _served(sink) == exp
     sink.compact()
     assert _served(sink) == exp
 
 
-def test_crash_during_compaction_base_write_recovers(spark, tmp_path):
-    """Simulate a crash mid-compaction: the new base directory is written
-    but the manifest never commits. Serve still reads the OLD view; re-run
-    compact() and everything converges."""
+def test_replace_base_never_moves_the_watermark_back(tmp_path):
+    """A rebuild committed after every part was folded and swept keeps the
+    watermark: replays of the folded batches must still be skipped."""
+    log = PartsLog(str(tmp_path / "log"))
+    os.makedirs(log.part_dir(0))
+    log.compact(lambda ids, base: os.makedirs(base))
+    assert log.manifest() == (0, 0) and log.part_ids() == []
+    log.replace_base(os.makedirs)
+    assert log.manifest() == (1, 0)
+    assert log.is_folded(0)
+
+
+# -- crash matrix over both parts-log sinks ---------------------------------
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash(*_args, **_kwargs):
+    raise _Crash
+
+
+def _rollup_case(spark):
     events = _events(spark)
-    chunks = _chunks(events, 3)
-    sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
-    for i, c in enumerate(chunks):
-        sink.process_batch(c, i)
-    exp = _expected(events)
-    # Crash simulation: build the would-be base_v0 without the manifest.
-    ids = sink._part_ids()
-    merged = sink._merged(sink._frames(ids))
-    merged.coalesce(1).write.mode("overwrite").parquet(sink._base_dir(0))
-    # No manifest → serve ignores the orphan base and reads the parts.
-    assert sink._manifest() == (-1, -1)
-    assert _served(sink) == exp
-    # Recovery: compact() overwrites the half-committed version from the
-    # same inputs and commits atomically.
+
+    def rows(sink):
+        return sorted(
+            (r["bucket"], r["event_type"], r["n_events"], r["sum_value"])
+            for r in sink.serve().collect()
+        )
+
+    return (
+        lambda path: PartedRollupSink(spark, str(path)),
+        _chunks(events, 4),
+        rows,
+        lambda rs: sum(r[2] for r in rs),
+        events.count(),
+    )
+
+
+def _ann_case(spark):
+    model = ann._model(spark)
+    emb = ann._emb(spark)
+
+    def rows(sink):
+        return sorted(
+            (r["vec_id"], r["model_version"], r["cell"], tuple(r["codes"]))
+            for r in sink.serve().collect()
+        )
+
+    return (
+        lambda path: ann._sink(spark, path, "idx", model=model),
+        ann._chunks(emb, 4),
+        rows,
+        len,
+        emb.count(),
+    )
+
+
+_CASES = {"rollup": _rollup_case, "ann_index": _ann_case}
+
+
+@pytest.fixture(params=sorted(_CASES))
+def case(request, spark):
+    """(make_sink(dir), 4 input chunks, served rows of a sink, rows → input
+    rows they count, total input rows)."""
+    return _CASES[request.param](spark)
+
+
+def test_crash_during_compaction_base_write_recovers(case, tmp_path, monkeypatch):
+    """Crash after the new base is written but before the manifest commits:
+    serve still reads the old view and ignores the orphan base; re-running
+    compact() converges on the uncrashed run."""
+    make, chunks, rows, counted, total = case
+    ref, sink = make(tmp_path / "ref"), make(tmp_path / "crash")
+    for s in (ref, sink):
+        for i in range(3):
+            s.process_batch(chunks[i], i)
+    ref.compact()
+    with monkeypatch.context() as m:
+        m.setattr(PartsLog, "commit", _crash)
+        with pytest.raises(_Crash):
+            sink.compact()
+    assert os.path.isdir(sink.log.base_dir(0))  # the orphan base
+    assert sink.log.manifest() == (-1, -1)
+    assert rows(sink) == rows(ref)
     sink.compact()
-    assert _served(sink) == exp
-    assert sink._manifest()[1] == max(ids)
+    assert sink.log.manifest() == ref.log.manifest()
+    assert sink.log.part_ids() == []
+    assert rows(sink) == rows(ref)
+    assert counted(rows(sink)) == total - chunks[3].count()
 
 
-def test_crash_after_manifest_before_gc_recovers(spark, tmp_path):
-    """Manifest committed but garbage not collected: folded parts and the
-    old base version are ignored; the next compact sweeps them."""
-    events = _events(spark)
-    chunks = _chunks(events, 3)
-    sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
-    for i, c in enumerate(chunks):
-        sink.process_batch(c, i)
-    exp = _expected(events)
-    sink.compact()  # base_v0, wm=2
-    # New batch, then a compaction whose GC "crashed": do the fold+commit
-    # by hand, leaving the folded part and base_v0 behind.
-    sink.process_batch(chunks[0], 3)
-    merged = sink._merged(sink._frames([3]))
-    merged.coalesce(1).write.mode("overwrite").parquet(sink._base_dir(1))
-    with open(sink._manifest_path, "w") as fh:
-        fh.write("1 3")
-    exp2 = _served(sink)  # garbage part 3 + base_v0 must be ignored
-    assert os.path.isdir(sink._base_dir(0))  # garbage present...
-    assert 3 in sink._part_ids()
+def test_crash_after_manifest_before_gc_recovers(case, tmp_path, monkeypatch):
+    """Manifest committed but garbage not collected: the folded part and the
+    old base version are ignored; the next compact sweeps them, and every
+    batch is counted once."""
+    make, chunks, rows, counted, total = case
+    ref, sink = make(tmp_path / "ref"), make(tmp_path / "crash")
+    for s in (ref, sink):
+        for i in range(3):
+            s.process_batch(chunks[i], i)
+        s.compact()  # base_v0, watermark 2
+        s.process_batch(chunks[3], 3)
+    ref.compact()
+    with monkeypatch.context() as m:
+        m.setattr(PartsLog, "gc", _crash)
+        with pytest.raises(_Crash):
+            sink.compact()
+    assert sink.log.manifest() == ref.log.manifest()
+    assert os.path.isdir(sink.log.base_dir(0))  # garbage present...
+    assert 3 in sink.log.part_ids()
+    assert rows(sink) == rows(ref)  # ...and ignored
     sink.compact()  # sweep
-    assert not os.path.isdir(sink._base_dir(0))
-    assert sink._part_ids() == []
-    assert _served(sink) == exp2
-    # And the double-counting hazard really was avoided: batch 3 applied once.
-    n_total = sum(n for n, _ in _served(sink).values())
-    n_exp = sum(n for n, _ in exp.values()) + chunks[0].count()
-    assert n_total == n_exp
+    assert not os.path.isdir(sink.log.base_dir(0))
+    assert sink.log.part_ids() == []
+    assert rows(sink) == rows(ref)
+    assert counted(rows(sink)) == total

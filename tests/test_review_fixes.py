@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from python_cdc_postgres_to_clickhouse_spark.operators import dedup as D
 from python_cdc_postgres_to_clickhouse_spark.operators import textstats as TS
-from python_cdc_postgres_to_clickhouse_spark.streaming.rollup_sink import HourlyRollupSink
+from python_cdc_postgres_to_clickhouse_spark.streaming.parts_rollup import PartedRollupSink
 from python_cdc_postgres_to_clickhouse_spark.streaming.upsert_sink import ParquetUpsertSink
 from python_cdc_postgres_to_clickhouse_spark.tables import load_tables
 
@@ -23,7 +23,7 @@ def test_rollup_batch_replay_is_noop(spark, tmp_path):
     must not double-count it."""
     t = load_tables(spark, SF_ORACLE)
     batch = t["events"].select("ts", "event_type", "value").limit(500)
-    sink = HourlyRollupSink(spark, str(tmp_path / "rollup"))
+    sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
     sink.process_batch(batch, batch_id=0)
     total1 = sink.serve().agg(F.sum("n_events")).first()[0]
     sink.process_batch(batch, batch_id=0)  # replay of the SAME batch id

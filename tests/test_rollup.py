@@ -1,5 +1,5 @@
-"""Incremental rollup maintenance: streaming merge equals batch recompute;
-dead-letter splitting."""
+"""Incremental rollup maintenance (the parts-based rollup sink): streaming
+merge equals batch recompute; dead-letter splitting."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from python_cdc_postgres_to_clickhouse_spark.sources.avro import (
     encode_user_record,
     frame_confluent,
 )
-from python_cdc_postgres_to_clickhouse_spark.streaming.rollup_sink import HourlyRollupSink
+from python_cdc_postgres_to_clickhouse_spark.streaming.parts_rollup import PartedRollupSink
 from python_cdc_postgres_to_clickhouse_spark.tables import load_tables
 
 from .conftest import SF_ORACLE
@@ -28,7 +28,7 @@ def test_rollup_incremental_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
     )
-    sink = HourlyRollupSink(spark, str(tmp_path / "rollup"))
+    sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
     q = sink.attach(stream, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
@@ -51,8 +51,7 @@ def test_rollup_incremental_equals_batch(spark, tmp_path):
         .collect()
     }
     assert served == batch
-    # Incremental merges (3 micro-batches) really happened: rollup rows
-    # were merged, not appended.
+    # The micro-batch parts' rows were merged at read, not appended.
     assert len(served) == len(batch)
 
 
@@ -64,7 +63,7 @@ def test_rollup_second_stream_merges(spark, tmp_path):
     half1 = events.limit(5000)
     src = str(tmp_path / "ev")
     half1.coalesce(2).write.parquet(src)
-    sink = HourlyRollupSink(spark, str(tmp_path / "rollup"))
+    sink = PartedRollupSink(spark, str(tmp_path / "rollup"))
     stream = lambda: (  # noqa: E731
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "2")
